@@ -18,17 +18,16 @@ def test_oracle_parity(spark, sf_dir, name):
     assert report.get("ok"), report
 
 
-def test_pip_enricher_strategies_agree(spark, sf_dir):
-    """pandas / expr / join strategies must produce identical flags
-    (the join path was previously unexercised; expr is capped to small
-    layers, so compare on the roads subset which is 3 polygons)."""
+def test_pip_enricher_matches_pip_hits(spark, sf_dir):
+    """PipEnricher's one Arrow pass must flag exactly the pages that
+    the DataFrame-edges path (pip_hits) finds inside a road polygon."""
     from pyspark.sql import functions as F
 
+    from urban_pointcloud_processing_spark.functions.pip import pip_hits
     from urban_pointcloud_processing_spark.operators.fusers import PipEnricher
     from urban_pointcloud_processing_spark.sources.layers import (
         ROAD_TYPES,
         polygon_edges_df,
-        polygon_layer,
     )
     from urban_pointcloud_processing_spark.sources.pages import (
         pages_from_orders,
@@ -38,18 +37,12 @@ def test_pip_enricher_strategies_agree(spark, sf_dir):
         2000
     ).localCheckpoint(eager=True)
     edges = polygon_edges_df(spark)
-    flag_types = {"_in_road": list(ROAD_TYPES)}
-    road_polys = [p for p in polygon_layer() if p["layer"] == "roads"]
-
-    def flags(strategy, **kw):
-        out = PipEnricher(edges, flag_types, strategy=strategy, **kw)(pages)
-        return {
-            r["page_id"]: r["_in_road"]
-            for r in out.select("page_id", "_in_road").collect()
-        }
-
-    pandas_f = flags("pandas", polys=road_polys)
-    expr_f = flags("expr", polys=road_polys)
-    join_f = flags("join")
-    assert pandas_f == expr_f == join_f
-    assert any(pandas_f.values()) and not all(pandas_f.values())
+    out = PipEnricher(edges, {"_in_road": list(ROAD_TYPES)})(pages)
+    flags = {
+        r["page_id"]: r["_in_road"]
+        for r in out.select("page_id", "_in_road").collect()
+    }
+    roads = edges.filter(F.col("bgt_type").isin(*ROAD_TYPES))
+    hits = {r["page_id"] for r in pip_hits(pages, roads).collect()}
+    assert {p for p, f in flags.items() if f} == hits
+    assert len(flags) == 2000 and hits and len(hits) < 2000

@@ -12,6 +12,8 @@ per plan branch), never once per F.get reference.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -56,3 +58,46 @@ def test_repetition_query_tokenizes_once(spark):
     # n_grams/ndist/dup_frac all reference the one bound token column;
     # token_count_expr contributes the only other split reference
     assert n <= 2, f"repetition plan evaluates split() {n}×, want ≤2"
+
+
+def _physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pip_enricher_is_one_arrow_pass(spark):
+    """The two-flag PipEnricher over raster-enriched pages (the flagship
+    plan's prefix) evaluates every flag in one Python node, with no
+    θ-join and no shuffle: a second Arrow pass or a nested-loop
+    candidate join must not creep back in."""
+    from urban_pointcloud_processing_spark.operators.fusers import (
+        PipEnricher,
+        RasterEnricher,
+    )
+    from urban_pointcloud_processing_spark.sources.layers import (
+        ROAD_TYPES,
+        polygon_edges_df,
+    )
+    from urban_pointcloud_processing_spark.sources.pages import synthetic_pages
+    from urban_pointcloud_processing_spark.sources.raster import raster_df
+
+    pages = RasterEnricher(raster_df(spark))(synthetic_pages(spark, 1000))
+    df = PipEnricher(
+        polygon_edges_df(spark),
+        {"_in_road": list(ROAD_TYPES), "_in_building": ["pand"]},
+    )(pages)
+    phys = _physical(df)
+    assert phys.count("ArrowEvalPython") == 1, phys
+    # Spark batches UDFs of one projection into one node: count them
+    (node,) = [ln for ln in phys.splitlines() if "ArrowEvalPython" in ln]
+    assert node.count("pythonUDF") == 1, node
+    assert "NestedLoop" not in phys, phys
+    assert not re.search(r"(?<!Broadcast)Exchange", phys), phys
+
+
+def test_pip_hits_arrow_is_one_map_pass(spark):
+    from urban_pointcloud_processing_spark.functions.pip import pip_hits_arrow
+    from urban_pointcloud_processing_spark.sources.layers import polygon_layer
+    from urban_pointcloud_processing_spark.sources.pages import synthetic_pages
+
+    phys = _physical(pip_hits_arrow(synthetic_pages(spark, 1000), polygon_layer()))
+    assert phys.count("MapInArrow") == 1, phys

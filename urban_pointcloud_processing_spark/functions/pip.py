@@ -1,29 +1,36 @@
-"""Point-in-polygon join — pure Catalyst, no UDF in the hot path.
+"""Point-in-polygon (PIP): one crossing-number kernel, two paths.
 
 The reference's PIP is a numba crossing-number kernel per polygon
-(src/upcp/utils/clip_utils.py:119-190) wrapped by poly_clip's bbox
-pre-filter (:193-238). Spark-first re-expression:
+(src/upcp/utils/clip_utils.py:119-190) behind poly_clip's bbox
+pre-filter (:193-238). Here the same test, an upward ray from the
+point with even-odd parity over all rings (so holes fall out, as in
+clip_utils.py:227-236), runs in two places:
 
-1. Polygons are pre-exploded to an **edge table** (sources/layers.py),
-   each edge row carrying the polygon bbox.
-2. Probe side joins the broadcast edge table on the bbox conjunct —
-   Catalyst evaluates the range predicate before anything else, which
-   IS the reference's bbox pre-filter (clip_utils.py:219-224).
-3. The upward-ray crossing test is a plain boolean expression; crossing
-   parity per (point, polygon) via groupBy + sum — map-side partial
-   aggregation keeps the shuffle at one row per candidate pair.
-4. Odd parity = inside (even-odd rule → interior rings/holes handled
-   for free, matching clip_utils.py:227-236 exterior-minus-holes).
+1. **The NumPy kernel** (``_inside``), the hot path: per polygon a bbox
+   gate, then an XOR fold of the crossing test over its edges, on
+   whole Arrow batches. The polygon layer is a small plan-build-time
+   list, so it ships with the closure and nothing is joined or
+   shuffled. Two Arrow entry points wrap it:
+   - ``pip_flags_pandas_udf``: per-row inside-any-polygon flags, all
+     flags in one ``ArrowEvalPython`` pass (PipEnricher);
+   - ``pip_hits_arrow``: (point, polygon) containment pairs from one
+     ``mapInArrow`` pass (the pip_join / pip_roads queries).
+2. **The DataFrame-edges path** (``pip_hits``, ``pip_flag``): the
+   polygons arrive as an edge table (sources/layers.EDGE_COLS), each
+   edge carrying its polygon's bbox. Points join the broadcast edges on
+   the bbox conjunct, the crossing test is a Column expression, and
+   parity is a groupBy sum per (point, polygon). It serves layers that
+   only exist as DataFrames and is the in-engine reference;
+   ``boundary_inclusive`` adds the reference's on-edge-counts-as-inside
+   rule (clip_utils.py:150-159).
 
-Everything stays inside whole-stage codegen; at 10^12 rows the only
-shuffle is the pair-level partial agg, and the build side (layer edges)
-is broadcast. Optional boundary_inclusive adds the reference's
-on-edge-counts-as-inside rule (clip_utils.py:150-159).
+Both paths use the same float expression as the DuckDB oracle
+(``pip_hits_sql``), so their results are bit-identical.
 """
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -74,22 +81,6 @@ def pip_hits(points: DataFrame, edges: DataFrame,
     return grouped.filter(inside).select(*pair_cols)
 
 
-def pip_semi(points: DataFrame, edges: DataFrame,
-             point_id: str = "page_id", **kw) -> DataFrame:
-    """Points inside ANY polygon of the layer (reference OR-accumulated
-    mask, src/upcp/fusion/building_fuser.py:83-87)."""
-    hits = pip_hits(points, edges, point_id=point_id, **kw).select(point_id).distinct()
-    return points.join(hits, point_id, "left_semi")
-
-
-def pip_anti(points: DataFrame, edges: DataFrame,
-             point_id: str = "page_id", **kw) -> DataFrame:
-    """Points inside NO polygon (reference BAG removal anti-join,
-    src/upcp/fusion/cable_fuser.py:126-129)."""
-    hits = pip_hits(points, edges, point_id=point_id, **kw).select(point_id).distinct()
-    return points.join(hits, point_id, "left_anti")
-
-
 def pip_flag(points: DataFrame, edges: DataFrame, flag: str,
              point_id: str = "page_id", **kw) -> DataFrame:
     """Append a boolean ``flag`` column = inside-any-polygon. Used by
@@ -105,196 +96,10 @@ def pip_flag(points: DataFrame, edges: DataFrame, flag: str,
     return points.join(hits, point_id, "left").fillna({flag: False})
 
 
-def pip_flags_multi(
-    points: DataFrame,
-    edges: DataFrame,
-    flag_types: dict[str, list[str]],
-    point_id: str = "page_id",
-    x: str = "x",
-    y: str = "y",
-) -> DataFrame:
-    """Append several inside-any-polygon flags in ONE candidate pass.
-
-    ``flag_types`` maps flag column → list of bgt_type values. The
-    edge table is scanned once, crossing parity is computed once per
-    (point, polygon), and each flag ORs the polygons of its types —
-    halving the broadcast-nested-loop work when a pipeline needs
-    multiple PIP layers (e.g. roads + buildings)."""
-    all_types = sorted({t for ts in flag_types.values() for t in ts})
-    px, py = F.col(x), F.col(y)
-    bbox = (px >= F.col("px_min")) & (px <= F.col("px_max")) & \
-           (py >= F.col("py_min")) & (py <= F.col("py_max"))
-    pairs = (
-        points.select(point_id, x, y)
-        .join(F.broadcast(edges.filter(F.col("bgt_type").isin(all_types))), bbox)
-        .groupBy(point_id, "polygon_id", "bgt_type")
-        .agg(F.sum(_crossing(px, py).cast("int")).alias("crossings"))
-        .filter(F.col("crossings") % 2 == 1)
-    )
-    flags = pairs.groupBy(point_id).agg(
-        *[
-            F.max(F.col("bgt_type").isin(ts).cast("int")).alias(flag)
-            for flag, ts in flag_types.items()
-        ]
-    )
-    out = points.join(flags, point_id, "left")
-    for flag in flag_types:
-        out = out.withColumn(flag, F.coalesce(F.col(flag) == 1, F.lit(False)))
-    return out
-
-
-def pip_hits_arrow(points: DataFrame, polygons: list[dict],
-                   point_id: str = "page_id", x: str = "x", y: str = "y",
-                   keep_cols: tuple[str, ...] = ("layer", "bgt_type"),
-                   types: list[str] | None = None) -> DataFrame:
-    """Map-only twin of ``pip_hits`` for the in-plan polygon layer
-    (a plan-build-time Python list, like pip_flag_pandas_udf uses):
-    one ``mapInArrow`` pass emits the (point, polygon-index) containment
-    pairs directly — the broadcast-nested-loop bbox θ-join and the
-    (point × polygon) crossing-parity aggregation exchange both
-    disappear (guide §2.4); polygon metadata re-attaches via a
-    broadcast of one row per polygon. Per-edge float ops are the exact
-    expressions of ``_crossing`` (bit-identical results; the same
-    NumPy kernel as pip_flag_pandas_udf)."""
-    import numpy as np
-    import pyarrow as pa
-
-    spark = points.sparkSession
-    polys = [p for p in polygons
-             if types is None or p["bgt_type"] in types]
-    prep = _prep_polys(polys, None)
-
-    out_schema = f"{point_id} long, _pidx int"
-
-    def hits(batches):
-        for batch in batches:
-            pid = batch.column(0).to_numpy(zero_copy_only=False)
-            px = batch.column(1).to_numpy(zero_copy_only=False)
-            py = batch.column(2).to_numpy(zero_copy_only=False)
-            ids, pidxs = [], []
-            for pi, (edges, (bx0, by0, bx1, by1)) in enumerate(prep):
-                bbox = (px >= bx0) & (px <= bx1) & (py >= by0) & (py <= by1)
-                idx = np.nonzero(bbox)[0]
-                if idx.size == 0:
-                    continue
-                sx, sy = px[idx], py[idx]
-                parity = np.zeros(idx.size, dtype=bool)
-                for x1, y1, x2, y2 in edges:
-                    straddles = (y1 > sy) != (y2 > sy)
-                    parity ^= straddles & (
-                        sx < (x2 - x1) * (sy - y1) / (y2 - y1) + x1
-                    )
-                hit = idx[parity]
-                if hit.size:
-                    ids.append(pid[hit])
-                    pidxs.append(np.full(hit.size, pi, dtype=np.int32))
-            if ids:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(ids), type=pa.int64()),
-                        pa.array(np.concatenate(pidxs), type=pa.int32()),
-                    ],
-                    names=[point_id, "_pidx"],
-                )
-
-    pairs = points.select(point_id, x, y).mapInArrow(hits, out_schema)
-    meta = spark.createDataFrame(
-        [(i, p["polygon_id"], *[p[c] for c in keep_cols])
-         for i, p in enumerate(polys)],
-        f"_pidx int, polygon_id long, "
-        + ", ".join(f"{c} string" for c in keep_cols),
-    )
-    return pairs.join(F.broadcast(meta), "_pidx").select(
-        point_id, "polygon_id", *keep_cols
-    )
-
-
-def pip_flag_expr(px: Column, py: Column, polygons: list[dict],
-                  types: list[str] | None = None) -> Column:
-    """MAP-ONLY inside-any-polygon flag: the polygon layer is a small
-    dimension table, so the whole even-odd test inlines as a column
-    expression — per polygon a bbox gate AND an XOR fold of the
-    crossing test over its edges. Zero shuffle, zero join; this is the
-    reference's broadcast nested loop (building_fuser.py:83-87)
-    expressed in whole-stage codegen, and the strategy that scales the
-    flagship pipeline linearly (no pair shuffle, no join-back).
-
-    ``polygons``: sources/layers.polygon_layer()-shaped dicts. Parity
-    over ALL rings (outer + holes) implements the even-odd/hole rule.
-    Horizontal edges are dropped at plan-build time (they never
-    straddle the upward ray — and would divide by zero)."""
-    flag = F.lit(False)
-    for p in polygons:
-        if types is not None and p["bgt_type"] not in types:
-            continue
-        bbox = (
-            (px >= F.lit(p["x_min"])) & (px <= F.lit(p["x_max"]))
-            & (py >= F.lit(p["y_min"])) & (py <= F.lit(p["y_max"]))
-        )
-        parity = F.lit(False)
-        for ring in p["rings"]:
-            for (x1, y1), (x2, y2) in zip(ring, ring[1:]):
-                if y1 == y2:
-                    continue
-                straddles = (F.lit(y1) > py) != (F.lit(y2) > py)
-                cross = straddles & (
-                    px
-                    < (F.lit(x2) - F.lit(x1)) * (py - F.lit(y1))
-                    / (F.lit(y2) - F.lit(y1))
-                    + F.lit(x1)
-                )
-                parity = parity != cross
-        flag = flag | (bbox & parity)
-    return flag
-
-
-def pip_flag_pandas_udf(polygons: list[dict], types: list[str] | None = None):
-    """Vectorized Arrow pandas UDF for inside-any-polygon (the
-    input_hint's prescribed hot path: batched NumPy, no per-row Python).
-
-    The inline-expression variant (pip_flag_expr) is exact but its
-    single giant boolean tree exceeds the JVM's JIT method budget for
-    layers beyond ~10 polygons and falls back to interpreted
-    evaluation. Here each edge's crossing test is one NumPy op over the
-    whole Arrow batch (float64, SAME formula and IEEE ops as the oracle
-    — bit-identical results), XOR-folded into a per-polygon parity and
-    OR-reduced across polygons. ~|edges| vector ops per batch.
-    Reference kernel: src/upcp/utils/clip_utils.py:119-190."""
-    import numpy as np
-
-    polys = _prep_polys(polygons, types)
-
-    from pyspark.sql.types import BooleanType
-
-    @F.pandas_udf(BooleanType())
-    def inside(x: pd.Series, y: pd.Series) -> pd.Series:
-        px = x.to_numpy(dtype=np.float64)
-        py = y.to_numpy(dtype=np.float64)
-        out = np.zeros(len(px), dtype=bool)
-        for edges, (bx0, by0, bx1, by1) in polys:
-            # bbox prefilter FIRST (the reference's clip_utils.py:219-224
-            # pattern): the crossing tests then touch only the ~1-4% of
-            # rows inside this polygon's bbox — an order of magnitude
-            # less memory traffic than testing every row per edge.
-            bbox = (px >= bx0) & (px <= bx1) & (py >= by0) & (py <= by1)
-            idx = np.nonzero(bbox)[0]
-            if idx.size == 0:
-                continue
-            sx, sy = px[idx], py[idx]
-            parity = np.zeros(idx.size, dtype=bool)
-            for x1, y1, x2, y2 in edges:
-                straddles = (y1 > sy) != (y2 > sy)
-                # identical expression to the oracle SQL / Column path
-                parity ^= straddles & (
-                    sx < (x2 - x1) * (sy - y1) / (y2 - y1) + x1
-                )
-            out[idx[parity]] = True
-        return pd.Series(out)
-
-    return inside
-
-
-def _prep_polys(polygons: list[dict], types: list[str] | None):
+def _prep(polygons: list[dict]):
+    """Per polygon: its non-horizontal edges as float64 rows
+    (x1, y1, x2, y2) over all rings, and its bbox. Horizontal edges
+    never straddle the upward ray (and would divide by zero)."""
     import numpy as np
 
     return [
@@ -311,52 +116,134 @@ def _prep_polys(polygons: list[dict], types: list[str] | None):
             (p["x_min"], p["y_min"], p["x_max"], p["y_max"]),
         )
         for p in polygons
-        if types is None or p["bgt_type"] in types
     ]
+
+
+def _inside(px, py, prep):
+    """The crossing-number kernel: yield ``(polygon_index, hit_rows)``
+    for every polygon of ``prep`` whose bbox holds a row of (px, py),
+    ``hit_rows`` being the row indices inside it. Reference kernel:
+    src/upcp/utils/clip_utils.py:119-190."""
+    import numpy as np
+
+    for pi, (edges, (bx0, by0, bx1, by1)) in enumerate(prep):
+        # bbox prefilter FIRST (clip_utils.py:219-224): the crossing
+        # tests then touch only the ~1-4% of rows inside this bbox
+        idx = np.nonzero((px >= bx0) & (px <= bx1) & (py >= by0) & (py <= by1))[0]
+        if idx.size == 0:
+            continue
+        sx, sy = px[idx], py[idx]
+        parity = np.zeros(idx.size, dtype=bool)
+        for x1, y1, x2, y2 in edges:
+            straddles = (y1 > sy) != (y2 > sy)
+            # identical expression to _crossing and the oracle SQL, so
+            # results are bit-identical to pip_hits / pip_hits_sql
+            parity ^= straddles & (sx < (x2 - x1) * (sy - y1) / (y2 - y1) + x1)
+        yield pi, idx[parity]
+
+
+_DDL_TYPES = {bool: "boolean", int: "long", float: "double", str: "string"}
+
+
+def _ddl_type(col: str, values: list) -> str:
+    """Spark type of one polygon metadata column, from its Python
+    values; an empty layer has none and declares ``string``."""
+    kinds = {type(v) for v in values} or {str}
+    if len(kinds) > 1 or not kinds <= _DDL_TYPES.keys():
+        raise TypeError(
+            f"polygon column {col!r} holds {sorted(k.__name__ for k in kinds)};"
+            f" want one of {sorted(k.__name__ for k in _DDL_TYPES)}"
+        )
+    return _DDL_TYPES[kinds.pop()]
+
+
+def pip_hits_arrow(points: DataFrame, polygons: list[dict],
+                   point_id: str = "page_id", x: str = "x", y: str = "y",
+                   keep_cols: tuple[str, ...] = ("layer", "bgt_type"),
+                   types: list[str] | None = None) -> DataFrame:
+    """Map-only twin of ``pip_hits`` for a plan-build-time polygon list
+    (sources/layers.polygon_layer()-shaped dicts): one ``mapInArrow``
+    pass runs the kernel and emits the (point, polygon-index)
+    containment pairs, with no bbox θ-join and no crossing-parity
+    exchange. Polygon metadata re-attaches via a broadcast of one row
+    per polygon. ``point_id`` keeps its type from ``points``;
+    ``polygon_id`` is long and each ``keep_cols`` type follows the
+    polygon dicts' values."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    polys = [p for p in polygons if types is None or p["bgt_type"] in types]
+    prep = _prep(polys)
+
+    def hits(batches):
+        for batch in batches:
+            px = batch.column(1).to_numpy(zero_copy_only=False)
+            py = batch.column(2).to_numpy(zero_copy_only=False)
+            found = [(pi, rows) for pi, rows in _inside(px, py, prep) if rows.size]
+            if found:
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        batch.column(0).take(
+                            np.concatenate([rows for _, rows in found])),
+                        pa.array(np.concatenate(
+                            [np.full(rows.size, pi, dtype=np.int32)
+                             for pi, rows in found])),
+                    ],
+                    names=[point_id, "_pidx"],
+                )
+
+    out_schema = StructType([
+        StructField(point_id, points.schema[point_id].dataType),
+        StructField("_pidx", IntegerType()),
+    ])
+    pairs = points.select(point_id, x, y).mapInArrow(hits, out_schema)
+    meta = points.sparkSession.createDataFrame(
+        [(i, p["polygon_id"], *[p[c] for c in keep_cols])
+         for i, p in enumerate(polys)],
+        ", ".join(["_pidx int", "polygon_id long"] + [
+            f"{c} {_ddl_type(c, [p[c] for p in polys])}" for c in keep_cols
+        ]),
+    )
+    return pairs.join(F.broadcast(meta), "_pidx").select(
+        point_id, "polygon_id", *keep_cols
+    )
 
 
 def pip_flags_pandas_udf(polygons: list[dict],
                          flag_types: dict[str, list[str] | None]):
-    """Multi-flag variant of pip_flag_pandas_udf: ALL requested flags
-    are computed in ONE Arrow pass over (x, y) and returned as a struct
-    of booleans. With k flags the per-flag UDFs ship the x/y batch to
-    Python k times; this ships it once — the Arrow transfer, not the
-    crossing math, dominates PIP cost at scale (it is the memory-bound
-    half of the flagship pipeline's scaling profile). Per-flag
-    arithmetic is identical to pip_flag_pandas_udf (bit-identical
-    results)."""
+    """Inside-any-polygon flags as one vectorized Arrow pandas UDF over
+    (x, y), returning a struct with one boolean per key of
+    ``flag_types`` (flag name → bgt_type values, None = every polygon).
+    All flags share one Arrow pass, and each polygon runs the kernel
+    once per batch however many flags use it: the x/y transfer, not
+    the crossing math, dominates PIP cost at scale."""
     import numpy as np
-
     from pyspark.sql.types import BooleanType, StructField, StructType
 
     flags = list(flag_types)
-    per_flag = {f: _prep_polys(polygons, flag_types[f]) for f in flags}
+
+    def wants(ts, p):
+        return ts is None or p["bgt_type"] in ts
+
+    polys = [p for p in polygons if any(wants(ts, p) for ts in flag_types.values())]
+    prep = _prep(polys)
+    # per polygon, the flags (row indices of the output) it lights
+    owners = [[i for i, ts in enumerate(flag_types.values()) if wants(ts, p)]
+              for p in polys]
     schema = StructType([StructField(f, BooleanType()) for f in flags])
 
     @F.pandas_udf(schema)
-    def inside_multi(x: pd.Series, y: pd.Series) -> pd.DataFrame:
+    def inside(x: pd.Series, y: pd.Series) -> pd.DataFrame:
         px = x.to_numpy(dtype=np.float64)
         py = y.to_numpy(dtype=np.float64)
-        cols = {}
-        for f in flags:
-            out = np.zeros(len(px), dtype=bool)
-            for edges, (bx0, by0, bx1, by1) in per_flag[f]:
-                bbox = (px >= bx0) & (px <= bx1) & (py >= by0) & (py <= by1)
-                idx = np.nonzero(bbox)[0]
-                if idx.size == 0:
-                    continue
-                sx, sy = px[idx], py[idx]
-                parity = np.zeros(idx.size, dtype=bool)
-                for x1, y1, x2, y2 in edges:
-                    straddles = (y1 > sy) != (y2 > sy)
-                    parity ^= straddles & (
-                        sx < (x2 - x1) * (sy - y1) / (y2 - y1) + x1
-                    )
-                out[idx[parity]] = True
-            cols[f] = out
-        return pd.DataFrame(cols)
+        out = np.zeros((len(flags), len(px)), dtype=bool)
+        for pi, rows in _inside(px, py, prep):
+            for f in owners[pi]:
+                out[f, rows] = True
+        return pd.DataFrame(dict(zip(flags, out)))
 
-    return inside_multi
+    return inside
 
 
 # --- DuckDB oracle SQL -------------------------------------------------

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.pip import pip_flag
+from ..functions.pip import pip_flag, pip_flags_pandas_udf
 from ..labels import Labels
 from ..plans.pipeline import Processor
 from ..sources.raster import with_raster
@@ -50,84 +50,42 @@ class PipEnricher:
     front — the same compute-once-reuse-everywhere pattern as
     RasterEnricher. Fuser stages then find their flag column present.
 
-    Three strategies, all map-only except ``join``:
-    - ``pandas`` (default): vectorized Arrow pandas UDF over the
-      broadcast polygon list (pip_flag_pandas_udf) — batched NumPy,
-      zero shuffle, scales linearly with cores; the input_hint path.
-    - ``expr``: pure-Catalyst inlined boolean tree (pip_flag_expr) —
-      fastest for small layers (≤ ~10 polygons); beyond that the giant
-      expression overflows the JIT method budget and interprets.
-    - ``join``: one shared candidate-pair pass + join-back
-      (pip_flags_multi) — for layers too large to broadcast at all.
-
-    Polygon inputs: ``pandas``/``expr`` compute from the ``polys`` ring
-    list (the broadcastable layer geometry — defaults to the fixture
-    ``polygon_layer()``); ``join`` computes from the ``edges``
-    DataFrame. A caller supplying a filtered or alternate polygon set
-    must pass it via ``polys`` (map-only strategies) or use
-    ``strategy='join'`` — ``edges`` is NOT consulted by the map-only
-    paths.
+    ``flag_types`` maps flag column → bgt_type values. All missing
+    flags come from one Arrow pass of pip_flags_pandas_udf over the
+    broadcast polygon list ``polys`` (default: the fixture
+    ``polygon_layer()``); batched NumPy, no join, no shuffle. A caller
+    with another polygon set passes it as ``polys``. ``edges`` is
+    accepted for call compatibility and not read.
     """
 
     def __init__(self, edges: DataFrame | None, flag_types: dict[str, list[str]],
-                 strategy: str = "pandas", polys: list[dict] | None = None):
-        if polys is None and strategy in ("pandas", "local", "expr"):
+                 polys: list[dict] | None = None):
+        if polys is None:
             from ..sources.layers import polygon_layer
 
             polys = polygon_layer()
-        self.edges = edges
         self.flag_types = flag_types
-        self.strategy = strategy
         self.polys = polys
 
     def __call__(self, pages: DataFrame) -> DataFrame:
-        from ..functions.pip import pip_flag_expr, pip_flags_multi
-
         missing = {
             f: ts for f, ts in self.flag_types.items() if f not in pages.columns
         }
         if not missing:
             return pages
-        if self.strategy in ("pandas", "local", "expr"):
-            from ..functions.pip import pip_flag_pandas_udf
-
-            polys = self.polys
-            if self.strategy == "expr":
-                return pages.withColumns(
-                    {
-                        flag: pip_flag_expr(F.col("x"), F.col("y"), polys, ts)
-                        for flag, ts in missing.items()
-                    }
-                )
-            if len(missing) > 1:
-                # one Arrow pass for ALL flags — the x/y batch transfer
-                # (not the crossing math) dominates PIP at scale
-                from ..functions.pip import pip_flags_pandas_udf
-
-                struct_col = pip_flags_pandas_udf(polys, missing)(
-                    F.col("x"), F.col("y")
-                )
-                return (
-                    pages.withColumn("_pipflags", struct_col)
-                    .withColumns(
-                        {flag: F.col("_pipflags").getField(flag)
-                         for flag in missing}
-                    )
-                    .drop("_pipflags")
-                )
-            return pages.withColumns(
-                {
-                    flag: pip_flag_pandas_udf(polys, ts)(F.col("x"), F.col("y"))
-                    for flag, ts in missing.items()
-                }
-            )
-        return pip_flags_multi(pages, self.edges, missing)
+        flags = pip_flags_pandas_udf(self.polys, missing)(F.col("x"), F.col("y"))
+        return (
+            pages.withColumn("_pipflags", flags)
+            .withColumns({f: F.col("_pipflags").getField(f) for f in missing})
+            .drop("_pipflags")
+        )
 
 
 class _PipProcessor(Processor):
     """Base for PIP-driven fusers. If the flag column was pre-computed
-    by PipEnricher the stage is a pure predicate; otherwise it runs its
-    own single-layer PIP flag join."""
+    by PipEnricher the stage is a pure predicate; otherwise it flags
+    its own ``edges`` DataFrame through the pip_flag join path, for a
+    layer that only exists as a DataFrame."""
 
     flag = "_pip"
 
